@@ -199,11 +199,52 @@ class CorpusRecipe:
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
+    return _read_or_none(spark, path) is not None
+
+
+def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet layer at ``path``, or None where :func:`_exists` is
+    False. Each parquet read pays a schema-inference job, so a caller
+    that probes a layer and then reads it should hold this frame
+    instead of paying for both."""
     try:
-        spark.read.parquet(path).schema
-        return True
+        return spark.read.parquet(path)
     except Exception:
-        return False
+        return None
+
+
+def _with_presence(
+    df: DataFrame, id_col: str, sidecars: dict[str, DataFrame | None]
+) -> DataFrame:
+    """``df`` plus one boolean column per ``sidecars`` entry: True where
+    the row's id occurs in that one-column id frame, NULL where it does
+    not (all NULL for None — an absent layer holds no id). ``df`` is
+    small and materialized: its ids are BROADCAST into a semi-join over
+    each id frame, so a corpus-sized sidecar is scanned map-side but
+    never shuffled. An id held by several sidecar rows (a band layer
+    holds one per band) repeats its flagged row; a row whose flag is
+    NULL is never repeated by that flag, so "is any flag NULL" — the
+    question the heal gate asks — is exact."""
+    out = df
+    probe = F.broadcast(df.select(id_col))
+    for flag, ids in sidecars.items():
+        if ids is None:
+            out = out.withColumn(flag, F.lit(None).cast("boolean"))
+            continue
+        present = ids.join(probe, id_col, "left_semi").withColumn(
+            flag, F.lit(True)
+        )
+        out = out.join(present, id_col, "left")
+    return out
+
+
+def _cc_non_keepers(members: DataFrame, stats: dict) -> int:
+    """Non-keeper rows of a :func:`dedup.connected_components` result.
+    The small-graph path reports them in ``stats`` (its union-find ran
+    on the driver); only a star-loop result pays a Spark count."""
+    if "non_keepers" in stats:
+        return int(stats["non_keepers"])
+    return members.filter(F.col("node") != F.col("component")).count()
 
 
 def _dir_exists(spark: SparkSession, path: str) -> bool:
@@ -728,6 +769,16 @@ def incremental_ingest(
     it (``healed_bands``, same id-absence proof as the fingerprint
     heal).
 
+    Heal accounting: the batch ids already in the lake are intersected
+    once into a checkpointed frame, and each is flagged by its presence
+    in the fingerprint and band sidecars' own id columns (broadcast
+    semi-joins — the sidecars are scanned, never shuffled). Every
+    fingerprint or band heal is a subset of the prior ids missing from
+    that sidecar, so the one aggregate that yields the guard counters,
+    ``admitted`` and the marker digest also proves both heals empty on
+    a healthy batch; the heal frames are built and counted only when it
+    finds such an id.
+
     A lake carrying a TEXT INDEX (r16 — ``text_index_b{N}``, built
     once by :func:`build_text_index`) upgrades the verify stage's
     history read from that per-candidate-batch docs scan to a
@@ -1096,8 +1147,9 @@ def incremental_ingest(
     url_keys_path = f"{out_root}/url_keys"
     marker_path = f"{out_root}/_lake_mode"
     recorded = None
-    if _exists(spark, marker_path):
-        row = spark.read.parquet(marker_path).head()
+    marker = _read_or_none(spark, marker_path)
+    if marker is not None:
+        row = marker.head()
         if row is None:
             # schema-readable but zero rows: an interrupted marker
             # overwrite — refuse clearly instead of a None-subscript
@@ -1267,17 +1319,19 @@ def incremental_ingest(
 
     n_url_skipped = 0
     batch_urls = None
-    # heal-coverage base (r17, ADVICE medium): id frames computed
-    # BEFORE each within-batch keeper drop, accumulated so
-    # prior_batch_ids below can cover batch-composition-dependent
+    # heal-coverage base (r17, ADVICE medium): the batch ids as they
+    # enter the FIRST within-batch keeper stage (url, near-dup, media),
+    # so prior_batch_ids below covers batch-composition-dependent
     # LOSERS too — a prior id whose sidecar append crashed can
     # re-arrive with UNCHANGED content and lose keeper selection to a
     # different doc in THIS batch (keeper choice depends on batch
     # composition, not content); deriving the heal base from the
     # post-drop batch alone would drop it from every sidecar heal
-    # forever. Each frame is already checkpointed by its own block,
-    # so these are cheap column re-reads, not new jobs.
-    pre_keeper_id_frames: list[DataFrame] = []
+    # forever. Every later keeper stage only drops rows of this frame,
+    # so it equals the post-drop batch unioned with each stage's
+    # candidates. Taken from the stage's checkpoint: a column re-read,
+    # not a new job.
+    heal_base: DataFrame | None = None
     if url_guard:
         # RefinedWeb URL dedup at ADMISSION — the cheapest guard, run
         # before any content hashing: one canonical-url window over
@@ -1312,9 +1366,7 @@ def incremental_ingest(
                 _W.partitionBy("__curl").orderBy(F.col(id_col).asc())
             ),
         ).localCheckpoint()
-        # url-candidate ids INCLUDING losers — the url-drop slice of
-        # the heal-coverage base
-        pre_keeper_id_frames.append(ranked.select(F.col(id_col)))
+        heal_base = batch.select(id_col)
         losers = ranked.filter(F.col("__rn_url") > 1).select(id_col)
         n_url_losers = losers.count()
         if n_url_losers:
@@ -1356,11 +1408,8 @@ def incremental_ingest(
             ),
             lsh_num_hashes, lsh_bands, lsh_hash_family,
         ).localCheckpoint()
-        # band-bearing ids pre-near-dup-drop: covers near-dup losers
-        # in the heal base (bandless NULL-text docs can't lose)
-        pre_keeper_id_frames.append(
-            batch_bands.select(F.col("id").alias(id_col)).distinct()
-        )
+        if heal_base is None:
+            heal_base = batch.select(id_col)
         # within-batch near-dedup: two near-dup copies arriving in the
         # same batch admit one keeper (the same contract the exact
         # guard gives exact copies) — pairs → components → anti-join,
@@ -1392,14 +1441,11 @@ def incremental_ingest(
                 verified, ["id_a", "id_b"], "left_anti"
             )
             pairs = verified
-        members = dedup.connected_components(pairs)
+        cc_stats: dict = {}
+        members = dedup.connected_components(pairs, stats=cc_stats)
         batch = dedup.drop_near_duplicates(batch, id_col, members)
-        # skip accounting from the members frame (pairs-sized) — the
-        # non-keepers ARE the dropped rows, so this replaces two
-        # batch-subplan counts with one job on a smaller frame
-        n_wb_blocked = members.filter(
-            F.col("node") != F.col("component")
-        ).count()
+        # skip accounting: the non-keepers ARE the dropped rows
+        n_wb_blocked = _cc_non_keepers(members, cc_stats)
         n_near_skipped += n_wb_blocked
         if wb_rejected is not None and wb_rejected.first() is not None:
             # rescued accounting (r16, verdict #2): docs that verify
@@ -1414,10 +1460,10 @@ def incremental_ingest(
             # (batch-bounded) and is SKIPPED on the common path: an
             # empty rejected set (one cheap first() on the
             # checkpointed anti-join) proves rescued = 0.
-            n_raw_nonkeep = (
-                dedup.connected_components(raw_pairs)
-                .filter(F.col("node") != F.col("component"))
-                .count()
+            raw_stats: dict = {}
+            n_raw_nonkeep = _cc_non_keepers(
+                dedup.connected_components(raw_pairs, stats=raw_stats),
+                raw_stats,
             )
             n_near_rescued += n_raw_nonkeep - n_wb_blocked
     n_media_skipped = 0
@@ -1548,18 +1594,8 @@ def incremental_ingest(
                 payload_col=media_col,
                 kinds=(),
             ).localCheckpoint()
-        # media-hash-bearing ids pre-media-drop: covers media losers
-        # in the heal base (hashless docs can't lose media selection)
-        pre_keeper_id_frames.append(
-            batch_mhashes.select(F.col(id_col)).distinct()
-        )
-        if media_routed:
-            pre_keeper_id_frames.append(
-                batch_vside.select(F.col(id_col)).distinct()
-            )
-            pre_keeper_id_frames.append(
-                batch_awins.select(F.col(id_col)).distinct()
-            )
+        if heal_base is None:
+            heal_base = batch.select(id_col)
         # within-batch perceptual dedup: two near-identical media
         # arriving together admit one keeper — each modality's pairs
         # union into ONE components pass (kind-disjoint ids, so no
@@ -1587,17 +1623,21 @@ def incremental_ingest(
                     max_bucket=media_max_bucket,
                 ).select("id_a", "id_b")
             )
-        mmembers = dedup.connected_components(mpairs)
+        mcc_stats: dict = {}
+        mmembers = dedup.connected_components(mpairs, stats=mcc_stats)
         batch = dedup.drop_near_duplicates(batch, id_col, mmembers)
-        n_media_skipped += mmembers.filter(
-            F.col("node") != F.col("component")
-        ).count()
-    if bucketed and spark.catalog.tableExists(fp_table):
-        seen = spark.table(fp_table).select("fingerprint")
-    elif not bucketed and _exists(spark, fp_path):
-        seen = spark.read.parquet(fp_path).select("fingerprint")
+        n_media_skipped += _cc_non_keepers(mmembers, mcc_stats)
+    # the fingerprint sidecar, read once: the content guard probes its
+    # fingerprint column, the heal accounting below its id column
+    if bucketed:
+        fp_hist = (
+            spark.table(fp_table)
+            if spark.catalog.tableExists(fp_table)
+            else None
+        )
     else:
-        seen = None
+        fp_hist = _read_or_none(spark, fp_path)
+    seen = fp_hist.select("fingerprint") if fp_hist is not None else None
     n_bloom_fastpath = 0
     blm = None  # probe-time filter, reused by the write path below
     if seen is not None and bloom_guard:
@@ -1688,19 +1728,33 @@ def incremental_ingest(
             ).localCheckpoint()
             n_url_skipped += uf.filter(F.col("__ug")).count()
             admitted = uf.filter(F.col("__ug").isNull()).drop("__ug")
-    if near_dup and _exists(spark, bands_path):
+    # History guards (near_dup, media, the id guard) each yield a hit-id
+    # frame; all of them ride ONE flag-join, ONE checkpoint and ONE
+    # aggregate below instead of a join + checkpoint + count each.
+    # Entries are (flag column, hit ids carrying it, filtering). A row
+    # lands in the counter of its FIRST filtering flag, so every count
+    # equals the former sequential join → count → filter chain; a
+    # non-filtering flag only feeds its counter.
+    hit_flags: list[tuple[str, DataFrame, bool]] = []
+    bands_hist = _read_or_none(spark, bands_path) if near_dup else None
+    if bands_hist is not None:
         # history probe: batch band rows BROADCAST against a
         # two-column scan of the persisted band layer — history is
         # never shuffled or text-read per batch (lsh_seen_ids plan
-        # notes). Checkpoint first so the semi (count) + anti
-        # (filter) pair below doesn't re-run the fingerprint guard
-        # subplan twice.
-        seen_b = spark.read.parquet(bands_path)
+        # notes). The chunking guard is skipped when the band frame
+        # provably fits one broadcast: it holds at most lsh_bands rows
+        # per arrived doc, a count this call already paid for.
+        probe_max_rows = (
+            None
+            if lsh_bands * arrived <= dedup.LSH_MAX_BROADCAST_ROWS
+            else dedup.LSH_MAX_BROADCAST_ROWS
+        )
         rescued_ids = None
         if near_dup_verify is None:
             near_hits = dedup.lsh_seen_ids(
-                None, seen_b, id_col, text_col, bands_df=batch_bands,
+                None, bands_hist, id_col, text_col, bands_df=batch_bands,
                 max_bucket=lsh_max_bucket,
+                max_broadcast_rows=probe_max_rows,
             )
         else:
             # verify-before-block (r15, verdict #2): rescore the
@@ -1716,8 +1770,9 @@ def incremental_ingest(
             # entirely (one cheap first() on the materialized frame
             # instead of planning the corpus-sized verify job)
             cand_pairs = dedup.lsh_seen_ids(
-                None, seen_b, id_col, text_col, bands_df=batch_bands,
+                None, bands_hist, id_col, text_col, bands_df=batch_bands,
                 max_bucket=lsh_max_bucket, return_pairs=True,
+                max_broadcast_rows=probe_max_rows,
             ).localCheckpoint()
             if cand_pairs.first() is None:
                 near_hits = cand_pairs.select(F.col(id_col))
@@ -1751,44 +1806,29 @@ def incremental_ingest(
                 # every one of these would have been blocked, so the
                 # count is the knob's measured value per batch (and
                 # the tuning signal for the Jaccard threshold). Ids
-                # only, batch-bounded; joined below in the same
-                # flag-join that counts the blocks.
+                # only, batch-bounded; a non-filtering flag (rescued
+                # rows stay admitted).
                 rescued_ids = cand_pairs.select(F.col(id_col)).join(
                     near_hits, id_col, "left_anti"
                 )
-        # ONE flag-join (the id-guard trick): count + filter both read
-        # the checkpointed result instead of paying a semi and an anti
-        # join over the guard subplan separately; the rescued flag
-        # rides the same join (rescued rows stay admitted — the flag
-        # only feeds the counter)
-        nd_flagged = admitted.join(
-            near_hits.withColumn("__nd", F.lit(True)), id_col, "left"
+        hit_flags.append(
+            ("__nd", near_hits.withColumn("__nd", F.lit(True)), True)
         )
         if rescued_ids is not None:
-            nd_flagged = nd_flagged.join(
-                rescued_ids.distinct().withColumn("__ndr", F.lit(True)),
-                id_col,
-                "left",
+            hit_flags.append(
+                (
+                    "__ndr",
+                    rescued_ids.distinct().withColumn("__ndr", F.lit(True)),
+                    False,
+                )
             )
-        nd_flagged = nd_flagged.localCheckpoint()
-        if rescued_ids is not None:
-            nd_counts = nd_flagged.agg(
-                F.count("__nd").alias("b"), F.count("__ndr").alias("r")
-            ).first()
-            n_near_skipped += int(nd_counts["b"])
-            n_near_rescued += int(nd_counts["r"])
-            nd_flagged = nd_flagged.drop("__ndr")
-        else:
-            n_near_skipped += nd_flagged.filter(F.col("__nd")).count()
-        admitted = nd_flagged.filter(F.col("__nd").isNull()).drop("__nd")
     if media_guard:
         # media history probes: batch hash rows BROADCAST against the
         # constant-width media sidecars (history never shuffled or
         # payload-read per batch) — image bands with exact Hamming
         # verify, video frame-set Jaccard, audio offset voting. The
-        # per-modality hit sets UNION into ONE flag-join (the same
-        # shape as the near_dup guard above), so the payload-bearing
-        # admitted frame is materialized once, not once per modality.
+        # per-modality hit sets UNION into one flag, so the
+        # payload-bearing admitted frame is not re-joined per modality.
         media_hits = None
         if _exists(spark, media_bands_path):
             media_hits = multimodal.phash_seen_ids(
@@ -1825,24 +1865,25 @@ def incremental_ingest(
                 else media_hits.unionByName(ahits)
             )
         if media_hits is not None:
-            md_flagged = admitted.join(
-                media_hits.distinct().withColumn("__md", F.lit(True)),
-                id_col,
-                "left",
-            ).localCheckpoint()
-            n_media_skipped += md_flagged.filter(F.col("__md")).count()
-            admitted = md_flagged.filter(
-                F.col("__md").isNull()
-            ).drop("__md")
+            hit_flags.append(
+                (
+                    "__md",
+                    media_hits.distinct().withColumn("__md", F.lit(True)),
+                    True,
+                )
+            )
     # crash-replay guard: ids already admitted are never re-appended
     # even if their fingerprint append didn't land
     prior_ids = None
+    prior_flags = None
     prior_batch_ids = None
+    fp_ids = fp_hist.select(id_col) if fp_hist is not None else None
     if bucketed and spark.catalog.tableExists(id_table):
         prior_ids = spark.table(id_table).select(id_col)
-    elif not bucketed and _exists(spark, docs_path):
-        prior_ids = spark.read.parquet(docs_path).select(id_col)
-    healable = None
+    elif not bucketed:
+        docs_hist = _read_or_none(spark, docs_path)
+        if docs_hist is not None:
+            prior_ids = docs_hist.select(id_col)
     if prior_ids is not None:
         if "__prior" in admitted.columns:
             raise ValueError(
@@ -1856,76 +1897,124 @@ def incremental_ingest(
         # flag-join and all six heals consume the BROADCAST tiny
         # frame instead of each re-materializing a semi-join against
         # the corpus-sized id column (previously one docs/id-table
-        # scan per heal site per batch). The base is the post-drop
-        # batch UNIONED with the pre-keeper-drop id frames collected
-        # above (r17, ADVICE medium): keeper selection depends on
-        # batch COMPOSITION, so a prior id with unchanged content can
-        # lose the url/near-dup/media keeper race in a later,
-        # non-identical batch — without the union its crashed sidecar
-        # appends would never be healed (the pre-r16 full-prior-ids
-        # joins covered this case). A replay whose CHANGED content
-        # gates or keeper-drops differently remains outside heal
-        # coverage, as before (the documented re-crawl residual).
-        heal_base = batch.select(id_col)
-        for extra in pre_keeper_id_frames:
-            heal_base = heal_base.unionByName(extra)
+        # scan per heal site per batch). The base is the batch as it
+        # entered its first keeper stage (heal_base above — r17, ADVICE
+        # medium): keeper selection depends on batch COMPOSITION, so a
+        # prior id with unchanged content can lose the url/near-dup/
+        # media keeper race in a later, non-identical batch — a base
+        # taken after the drops would never heal its crashed sidecar
+        # appends (the pre-r16 full-prior-ids joins covered this
+        # case). A replay whose CHANGED content gates or keeper-drops
+        # differently remains outside heal coverage, as before (the
+        # documented re-crawl residual).
+        if heal_base is None:
+            heal_base = batch.select(id_col)
         prior_batch_ids = (
             heal_base
             .dropDuplicates()
             .join(prior_ids, id_col, "left_semi")
             .localCheckpoint()
         )
-        # id guard as ONE flag-join (not a semi + anti pair, which
-        # would run the dedup + fingerprint-guard subplan twice):
-        # rows with a prior id split into the two outcomes below.
-        # - no prior id → genuinely new, admit;
-        # - prior id present → skip the doc (already admitted), and
-        #   CHECK it for the fingerprint-sidecar backfill below.
-        # (the deduped intersection frame also removes the old
-        # fan-out case — a prior id appearing twice in the corpus no
-        # longer duplicates the flagged row)
-        flagged = admitted.join(
-            F.broadcast(
-                prior_batch_ids.withColumn("__prior", F.lit(True))
+        # presence flags for the fingerprint and band heals: "prior id
+        # present in that sidecar's own id column". Each heal is a
+        # subset of the prior ids MISSING there, so a batch with no
+        # such id (every healthy batch) proves both heals empty and
+        # never builds or counts them. Read once, by the aggregate.
+        sidecar_ids = {"__fp": fp_ids}
+        if near_dup:
+            sidecar_ids["__bd"] = (
+                None
+                if bands_hist is None
+                else bands_hist.select(F.col("id").alias(id_col))
+            )
+        prior_flags = _with_presence(prior_batch_ids, id_col, sidecar_ids)
+        # the id guard's flag: rows with a prior id are skipped
+        # (already admitted) and are the fingerprint-heal candidates
+        hit_flags.append(
+            (
+                "__prior",
+                F.broadcast(prior_batch_ids.withColumn("__prior", F.lit(True))),
+                True,
+            )
+        )
+    # ONE flag-join over the admitted candidates (the id-guard trick,
+    # applied to every guard): the counters and the admitted rows all
+    # read this one checkpoint — and the materialization also pins
+    # the rows the appends below write, so an input file changing
+    # between jobs cannot make them admit different row sets
+    flagged = admitted
+    for _name, hits, _filtering in hit_flags:
+        flagged = flagged.join(hits, id_col, "left")
+    flagged = flagged.localCheckpoint()
+    # one shared aggregate (the Layered Aggregate Engine shape): every
+    # guard counter, the admitted count and the admitted-id digest of
+    # the _lake_stats marker, plus — through a tagged union with the
+    # prior-id frame — whether any prior id is missing from a sidecar
+    flag_names = [name for name, _, _ in hit_flags]
+    is_row = ~F.col("__gap_row")
+    keep = F.lit(True)
+    counters = []
+    for name, _hits, filtering in hit_flags:
+        hit = keep & F.col(name).isNotNull()
+        counters.append(F.count_if(is_row & hit).alias(name))
+        if name == "__prior":
+            fp_heal_rows = hit
+        if filtering:
+            keep = keep & F.col(name).isNull()
+    counters.append(F.count_if(is_row & keep).alias("__admitted"))
+    counters.append(
+        F.coalesce(
+            F.bit_xor(F.when(is_row & keep, F.xxhash64(F.col(id_col)))),
+            F.lit(0),
+        ).alias("__digest")
+    )
+    agg_src = flagged.select(
+        F.lit(False).alias("__gap_row"), id_col, *flag_names
+    )
+    if prior_flags is not None:
+        counters += [
+            F.count_if(F.col("__gap_row") & F.col(c).isNull()).alias(
+                f"{c}_gap"
+            )
+            for c in sidecar_ids
+        ]
+        agg_src = agg_src.unionByName(
+            prior_flags.select(
+                F.lit(True).alias("__gap_row"), id_col, *sidecar_ids
             ),
-            id_col,
-            "left",
-        ).localCheckpoint()
-        # BACKFILL candidates: doc row landed but its fingerprint
-        # append did NOT. "fingerprint absent from the sidecar" alone
-        # does not prove that — the SAME id can legitimately return
-        # with CHANGED content (a re-crawl), whose fingerprint must
-        # never enter the sidecar (the content was never admitted;
-        # appending it would permanently block that content under any
-        # future id). The proof is the id's ABSENCE from the
-        # sidecar's own id column: a fully-landed doc always has its
-        # (original) fingerprint row there. So heal = __prior rows
-        # anti-joined against the sidecar ids — empty on every
-        # healthy batch, and exact for partial fingerprint appends.
-        # dropDuplicates: the same id can arrive twice in ONE batch
-        # with different content (exact_dedup keys on content, not
-        # id); both rows are legitimate heal candidates.
-        fp_ids = None
-        if bucketed and spark.catalog.tableExists(fp_table):
-            fp_ids = spark.table(fp_table).select(id_col)
-        elif not bucketed and _exists(spark, fp_path):
-            fp_ids = spark.read.parquet(fp_path).select(id_col)
+            allowMissingColumns=True,
+        )
+    totals = agg_src.agg(*counters).first().asDict()
+    n_near_skipped += totals.get("__nd", 0)
+    n_near_rescued += totals.get("__ndr", 0)
+    n_media_skipped += totals.get("__md", 0)
+    n_admitted = totals["__admitted"]
+    adm_digest = totals["__digest"]
+    admitted = flagged.filter(keep).drop(*flag_names)
+    # BACKFILL candidates: doc row landed but its fingerprint
+    # append did NOT. "fingerprint absent from the sidecar" alone
+    # does not prove that — the SAME id can legitimately return
+    # with CHANGED content (a re-crawl), whose fingerprint must
+    # never enter the sidecar (the content was never admitted;
+    # appending it would permanently block that content under any
+    # future id). The proof is the id's ABSENCE from the
+    # sidecar's own id column: a fully-landed doc always has its
+    # (original) fingerprint row there. So heal = __prior rows
+    # anti-joined against the sidecar ids — empty on every
+    # healthy batch (the presence flag proves it without a job),
+    # and exact for partial fingerprint appends.
+    # dropDuplicates: the same id can arrive twice in ONE batch
+    # with different content (exact_dedup keys on content, not
+    # id); both rows are legitimate heal candidates.
+    healable = None
+    if totals.get("__fp_gap"):
         healable = (
-            flagged.filter(F.col("__prior"))
+            flagged.filter(fp_heal_rows)
             .select("fingerprint", id_col)
             .dropDuplicates()
         )
         if fp_ids is not None:
             healable = healable.join(fp_ids, id_col, "left_anti")
-        admitted = flagged.filter(F.col("__prior").isNull()).drop("__prior")
-        n_admitted = admitted.count()
-    else:
-        # one materialization for the consumers below (count +
-        # appends) — otherwise the dedup + guard joins re-run per
-        # consumer, and the appends could even admit different row
-        # sets if an input file changed between jobs
-        admitted = admitted.localCheckpoint()
-        n_admitted = admitted.count()
     # bands-sidecar heal (near_dup lakes): same proof obligation as
     # the fingerprint heal, one crash window later — a doc row (and
     # possibly its fingerprint) landed but the bands append did not,
@@ -1936,19 +2025,18 @@ def incremental_ingest(
     # may still be missing. Proof = id present in the admitted-id set
     # AND absent from the bands layer's own id column; the healed
     # rows are the replayed batch's bands (shares the fp heal's
-    # re-crawl-during-crash-window residual).
+    # re-crawl-during-crash-window residual). Built only when the
+    # presence flag found such an id.
     healable_bands = None
-    if near_dup and prior_ids is not None:
+    if totals.get("__bd_gap"):
         hb = batch_bands.join(
             F.broadcast(prior_batch_ids.withColumnRenamed(id_col, "id")),
             "id",
             "left_semi",
         )
-        if _exists(spark, bands_path):
+        if bands_hist is not None:
             hb = hb.join(
-                spark.read.parquet(bands_path)
-                .select("id")
-                .dropDuplicates(),
+                bands_hist.select("id").dropDuplicates(),
                 "id",
                 "left_anti",
             )
@@ -2405,7 +2493,6 @@ def incremental_ingest(
             "url_keys": (n_healed_urls, healable_urls),
             "fingerprints": (0 if bucketed else n_healed, healable),
         }
-        adm_digest = _lake_docs_digest(admitted, id_col)
         if adm_digest == last_digest and n_admitted == last_n:
             # replayed batch: its increment already landed
             pass
@@ -2593,7 +2680,7 @@ def incremental_ingest(
             # anywhere before this lands is healed on replay by the
             # guards above + the bands backfill
             batch_bands.join(
-                admitted.select(F.col(id_col).alias("id")),
+                F.broadcast(admitted.select(F.col(id_col).alias("id"))),
                 "id",
                 "left_semi",
             ).write.mode("append").parquet(bands_path)
@@ -2794,8 +2881,10 @@ def incremental_ingest(
 
 def _lake_docs_digest(df: DataFrame, id_col: str) -> int:
     """Order-free id-set digest (``bit_xor(xxhash64(id))`` — the
-    line-census / shard-manifest digest) used to make the
-    ``_lake_stats`` running-total increment replay-idempotent."""
+    line-census / shard-manifest digest) that makes the
+    ``_lake_stats`` running-total increment replay-idempotent.
+    :func:`incremental_ingest` computes the same expression inside its
+    one shared aggregate; this standalone form is its reference."""
     row = df.agg(
         F.coalesce(
             F.bit_xor(F.xxhash64(F.col(id_col))), F.lit(0)
@@ -3722,8 +3811,10 @@ def maintain_lake(
     threshold so the entry repair in :func:`compact_layer` finishes
     the swap. Default ``None`` keeps the pre-r15 bloom-only behavior.
     The sweep is also the RE-SYNC point for the ``compact_due``
-    append accounting (r16): swept layers reset to 0 (via
-    :func:`compact_layer`), examined-but-under-threshold layers are
+    append accounting (r16): swept layers reset to 0 (the reset
+    :func:`compact_layer` applies on its own, batched here into ONE
+    marker read + write after the sweep), examined-but-under-threshold
+    layers are
     set to their MEASURED file count — the per-batch counter is a
     write-time upper bound (empty appends count 1, write 0), and
     without the re-sync an overcounted never-swept layer would keep
@@ -3835,6 +3926,10 @@ def maintain_lake(
         jvm = spark._jvm
         hpath = jvm.org.apache.hadoop.fs.Path
         resync: dict[str, int] = {}
+        # layers this sweep rewrote: their marker entries reset to 0 in
+        # the one marker write below (compact_layer's standalone reset,
+        # batched — one marker read + write per call, not per layer)
+        swapped: list[str] = []
         # trust_marker (r16): skip the recursive listing for layers
         # whose append accounting sits under the threshold — on an
         # object store the per-layer LIST is the dominant cost of a
@@ -3920,9 +4015,12 @@ def maintain_lake(
                 else 0
             )
             n_files = n_files_base + tail_files
-            crashed = not _exists(spark, path) and _data_file_count(
+            # the __compact listing first: it is empty on every sweep
+            # but a crashed one, so the live layer's readability probe
+            # (a schema-inference job) runs only when it can matter
+            crashed = _data_file_count(
                 spark, path + "__compact"
-            )
+            ) and not _exists(spark, path)
             if (
                 n_files <= int(compact_above_files)
                 and not crashed
@@ -4051,13 +4149,14 @@ def maintain_lake(
                         # here (r19, verdict #1 — the r18 fallback
                         # fired exactly there, re-introducing the
                         # corpus-scale rewrite every sweep).
-                        res = compact_layer(
+                        res = _compact_swap(
                             spark, path,
                             target_file_mb=compact_target_file_mb,
                             partition_by=layer_pby,
                             partition_values=nb,
                             dedup_rows=True,
                         )
+                        swapped.append(layer)
                         compacted_layers += 1
                         files_before += res["files_before"]
                         files_after += res["files_after"]
@@ -4111,7 +4210,7 @@ def maintain_lake(
                     ),
                 )
                 fold_path = tail_path
-            res = compact_layer(
+            res = _compact_swap(
                 spark, path, target_file_mb=compact_target_file_mb,
                 partition_by=layer_pby,
                 partition_values=nb,
@@ -4119,6 +4218,7 @@ def maintain_lake(
                 fold_path=fold_path,
                 dedup_rows=bool(layer_pby),
             )
+            swapped.append(layer)
             compacted_layers += 1
             files_before += res["files_before"]
             files_after += res["files_after"]
@@ -4140,17 +4240,21 @@ def maintain_lake(
                     .write.mode("overwrite")
                     .parquet(_text_index_ids_path(out_root, nb))
                 )
-        if resync:
+        if resync or swapped:
             st = _read_lake_stats(spark, f"{out_root}/_lake_stats")
-            if st is not None and any(
-                st[3].get(k) != v for k, v in resync.items()
-            ):
+            if st is not None:
                 merged_files = dict(st[3])
+                for layer in swapped:
+                    # only an entry that exists and is nonzero resets,
+                    # exactly as compact_layer's own reset does
+                    if merged_files.get(layer):
+                        merged_files[layer] = 0
                 merged_files.update(resync)
-                _write_lake_stats(
-                    spark, f"{out_root}/_lake_stats",
-                    st[0], st[1], st[2], files=merged_files,
-                )
+                if merged_files != st[3]:
+                    _write_lake_stats(
+                        spark, f"{out_root}/_lake_stats",
+                        st[0], st[1], st[2], files=merged_files,
+                    )
 
     def _maintain_filter(layer: str, max_fill: float) -> dict[str, int]:
         nonlocal units_left, deferred_units
@@ -4341,8 +4445,54 @@ def compact_layer(
     copy, so prefer their native compaction windows). Uses the Hadoop
     FileSystem API, so the same code runs on file://, hdfs://, s3a://.
 
+    After the swap, the layer's files-appended-since-compaction entry
+    in the sibling ``_lake_stats`` marker (r16) is reset to 0 — the
+    compaction IS the event that counter measures distance from.
+    :func:`maintain_lake` does not call this function: it runs the
+    same swap per layer and folds every reset into its one marker
+    write at the end of the sweep.
+
     Returns {files_before, files_after, rows}.
     """
+    res = _compact_swap(
+        spark, path,
+        target_file_mb=target_file_mb,
+        partition_by=partition_by,
+        partition_values=partition_values,
+        fold_df=fold_df,
+        fold_path=fold_path,
+        dedup_rows=dedup_rows,
+    )
+    # A layer outside a marker-carrying lake (or a pre-r16 lake) has no
+    # entry to reset; the running total and replay digest are carried
+    # over untouched. A crash before this write leaves a stale-high
+    # counter, which only re-triggers an (idempotent, cheap on a
+    # freshly compacted layer) sweep — the safe direction.
+    root, _, layer_name = path.rstrip("/").rpartition("/")
+    if root:
+        stats = _read_lake_stats(spark, f"{root}/_lake_stats")
+        if stats is not None and stats[3].get(layer_name):
+            reset = dict(stats[3])
+            reset[layer_name] = 0
+            _write_lake_stats(
+                spark, f"{root}/_lake_stats",
+                stats[0], stats[1], stats[2], files=reset,
+            )
+    return res
+
+
+def _compact_swap(
+    spark: SparkSession,
+    path: str,
+    target_file_mb: int = 128,
+    partition_by: str | None = None,
+    partition_values: int | None = None,
+    fold_df: DataFrame | None = None,
+    fold_path: str | None = None,
+    dedup_rows: bool = False,
+) -> dict[str, int]:
+    """:func:`compact_layer` without the marker reset: rewrite, verify,
+    swap. Callers own the ``_lake_stats`` accounting."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
@@ -4424,7 +4574,6 @@ def compact_layer(
         # exact-duplicate rows — cheap-fold crash residue (r18)
         df = df.dropDuplicates()
     n_out = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
-    rows = df.count()
     if partition_by is None:
         df.repartition(n_out).write.mode("overwrite").parquet(
             path + "__compact"
@@ -4443,7 +4592,23 @@ def compact_layer(
             .partitionBy(partition_by)
             .parquet(path + "__compact")
         )
-    got = spark.read.parquet(path + "__compact").count()
+    # step 2 in ONE job: the source frame and the written directory
+    # are counted by a single aggregate over their tagged union
+    counts = (
+        df.select(F.lit(False).alias("__written"))
+        .unionByName(
+            # read with the source's schema: no schema-inference job
+            spark.read.schema(df.schema)
+            .parquet(path + "__compact")
+            .select(F.lit(True).alias("__written"))
+        )
+        .agg(
+            F.count_if(~F.col("__written")).alias("rows"),
+            F.count_if(F.col("__written")).alias("got"),
+        )
+        .first()
+    )
+    rows, got = int(counts["rows"]), int(counts["got"])
     if got != rows:
         fs.delete(compacted, True)
         raise ValueError(
@@ -4465,24 +4630,6 @@ def compact_layer(
         # tolerate them; the next fold's dropDuplicates removes them),
         # never data loss
         fs.delete(hpath(fold_path), True)
-    # reset the layer's files-appended-since-compaction accounting in
-    # the sibling ``_lake_stats`` marker (r16, verdict #1) — the
-    # compaction IS the event the counter measures distance from. A
-    # layer outside a marker-carrying lake (or a pre-r16 lake) has no
-    # entry to reset; the running total and replay digest are carried
-    # over untouched. A crash before this write leaves a stale-high
-    # counter, which only re-triggers an (idempotent, cheap on a
-    # freshly compacted layer) sweep — the safe direction.
-    root, _, layer_name = path.rstrip("/").rpartition("/")
-    if root:
-        stats = _read_lake_stats(spark, f"{root}/_lake_stats")
-        if stats is not None and stats[3].get(layer_name):
-            reset = dict(stats[3])
-            reset[layer_name] = 0
-            _write_lake_stats(
-                spark, f"{root}/_lake_stats",
-                stats[0], stats[1], stats[2], files=reset,
-            )
     return {
         "files_before": files_before,
         "files_after": _files(live),

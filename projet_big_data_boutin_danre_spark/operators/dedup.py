@@ -428,6 +428,12 @@ def lsh_bucket_profile(
     )
 
 
+# Default broadcast-chunking bound of :func:`lsh_seen_ids`. A caller
+# that can bound its bands frame from counts it already holds (rows ×
+# bands) compares against this to skip the guard's checkpoint + count.
+LSH_MAX_BROADCAST_ROWS = 2_000_000
+
+
 def lsh_seen_ids(
     batch: DataFrame | None,
     seen_bands: DataFrame,
@@ -438,7 +444,7 @@ def lsh_seen_ids(
     shingle_k: int = 8,
     hash_family: str = "md5",
     bands_df: DataFrame | None = None,
-    max_broadcast_rows: int | None = 2_000_000,
+    max_broadcast_rows: int | None = LSH_MAX_BROADCAST_ROWS,
     max_bucket: int | None = None,
     return_pairs: bool = False,
 ) -> DataFrame:
@@ -485,7 +491,9 @@ def lsh_seen_ids(
     bands frame once (``localCheckpoint``) so the row count and every
     chunk read one computation of the signatures. Pass
     ``max_broadcast_rows=None`` to skip the guard (and the
-    checkpoint+count) when the caller knows the batch is bounded.
+    checkpoint+count) when the caller knows the batch is bounded —
+    e.g. ``bands × rows ≤ LSH_MAX_BROADCAST_ROWS`` from a row count it
+    already paid for (:func:`incremental_ingest` does exactly this).
 
     ``max_bucket`` (r14 — the media probes' hot-bucket guard applied
     to the text gate): a band key held by more than that many HISTORY
@@ -1086,8 +1094,12 @@ def connected_components(
     threshold and take the star loop unchanged, so the 100 TB shape is
     untouched. Output identical by construction: union-by-min-root
     union-find yields exactly ``component = min reachable id``.
-    ``stats["rounds"]`` is 0 on this path (no loop ran) and
-    ``stats["small_graph_edges"]`` records the edge count; pass
+    ``stats["rounds"]`` is 0 on this path (no loop ran),
+    ``stats["small_graph_edges"]`` records the edge count and
+    ``stats["non_keepers"]`` the number of nodes whose component is
+    not themselves (nodes minus roots — what
+    ``filter(node != component).count()`` would return, known here
+    without a job; absent when the loop ran); pass
     ``small_graph_threshold=None`` to force the distributed loop (the
     loop-mechanics tests and the bench convergence probe do)."""
     a_dt = pairs.schema[a_col].dataType.typeName()
@@ -1210,6 +1222,10 @@ def connected_components(
         .distinct()
         .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
     )
+    if stats is not None:
+        # set only by the small-graph path below: a reused dict must
+        # not carry a previous call's count past a star-loop run
+        stats.pop("non_keepers", None)
     if small_graph_threshold is not None:
         # gate + collect in ONE bounded job (r20): a separate count()
         # before toPandas() was a second pass over the checkpoint
@@ -1246,6 +1262,9 @@ def connected_components(
                 else:
                     parent[ru] = rv
             nodes = sorted(set(pdf["u"].tolist()) | set(pdf["v"].tolist()))
+            assignment = [(n, _find(n)) for n in nodes]
+            if stats is not None:
+                stats["non_keepers"] = sum(1 for n, c in assignment if n != c)
             spark = pairs.sparkSession
             _free_local_checkpoint(edges)
             # broadcast mark: the mapping is bounded by construction
@@ -1259,11 +1278,7 @@ def connected_components(
             from ..functions.localdf import tiny_df
 
             return F.broadcast(
-                tiny_df(
-                    spark,
-                    [(n, _find(n)) for n in nodes],
-                    "node long, component long",
-                )
+                tiny_df(spark, assignment, "node long, component long")
             )
     # the round whose checkpoint blocks are currently live; freed as
     # soon as the next round's checkpoint has materialized (see

@@ -269,6 +269,39 @@ def test_multimodal_features_deterministic(spark):
     assert all(0.0 <= x <= 1.0 for x in f[1])
 
 
+@pytest.mark.parametrize("max_part", ["128MB", "134217728b"])
+def test_extract_features_size_gate_reads_byte_strings(
+    spark, tmp_path, max_part
+):
+    """The single-partition gate reads ``maxPartitionBytes`` the way
+    Spark writes it — a byte string (``"128MB"``; ``"134217728b"`` is
+    Spark's own default) — so a session that never set the conf to a
+    bare integer still skips the repartition for a tiny input."""
+    spark.createDataFrame(
+        [(1, "abc", "en", "s", 3)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(tmp_path / "docs"))
+    # a file scan carries a real size estimate (a local relation's is
+    # unbounded, which never passes the gate)
+    media = multimodal.synth_media_from_documents(
+        spark.read.parquet(str(tmp_path / "docs"))
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, max_part)
+    try:
+        feats = multimodal.extract_features(media)
+        plan = feats._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "RoundRobinPartitioning" not in plan
+    # an explicit target still repartitions
+    forced = multimodal.extract_features(media, target_partitions=2)
+    assert "RoundRobinPartitioning" in (
+        forced._jdf.queryExecution().executedPlan().toString()
+    )
+
+
 def test_perceptual_hash_properties(spark):
     """dHash semantics on the stub codec: identical payloads hash
     identically; a same-length single-byte edit stays within a couple

@@ -1,30 +1,37 @@
-"""Dump .explain("formatted") for every declared query to plans/r20/.
+"""Dump .explain("formatted") for every declared query to one directory.
 
-Usage: python tools/dump_plans_r20.py [suffix] [query ...]
-Writes plans/r20/<name>_<suffix>.txt (suffix default "before").
-Also prints a one-line shape summary per query: #Exchange, join nodes,
-BatchEvalPython/ArrowEvalPython presence, #WholeStageCodegen spans.
+Usage: python tools/dump_plans.py --out plans/<round> [--suffix S] [query ...]
+Writes <out>/<name>_<suffix>.txt (suffix default "before"); a relative
+--out is taken from the repo root. Also prints a one-line shape summary
+per query: #Exchange, join nodes, BatchEvalPython/ArrowEvalPython
+presence, #WholeStageCodegen spans.
 """
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from projet_big_data_boutin_danre_spark.session import get_spark
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", required=True,
+                    help="output directory, e.g. plans/r21")
+    ap.add_argument("--suffix", default="before",
+                    help="file name suffix (default: before)")
+    ap.add_argument("queries", nargs="*",
+                    help="query names to dump (default: all)")
+    args = ap.parse_args()
+    only = set(args.queries)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r20",
-    )
+    out_dir = os.path.join(REPO, args.out)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan_dump")
     spark.sparkContext.setLogLevel("ERROR")
@@ -39,7 +46,7 @@ def main() -> None:
             )
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {e}"
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}_{args.suffix}.txt"), "w") as f:
             f.write(plan)
         n_ex = len(re.findall(r"\bExchange\b", plan))
         n_wsc = len(re.findall(r"WholeStageCodegen", plan))
